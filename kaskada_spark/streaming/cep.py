@@ -2,10 +2,9 @@
 patterns.
 
 Streaming twin of operators/cep.py::match_funnel. Each entity's state
-carries (stage, per-stage hit instants) plus a small buffer of
-not-yet-settled rows; rows SETTLE in (time, subsort) order once the
-watermark passes them (the same settle-at-watermark discipline as
-streaming/merge.py and streaming/shift.py), so out-of-order arrival
+carries (stage, per-stage hit instants) plus the settling buffer of
+not-yet-settled rows (streaming/buffer.py); rows SETTLE in (time,
+subsort) order once the watermark passes them, so out-of-order arrival
 within the watermark delay cannot corrupt the match order.
 
 Key property that keeps state tiny: a settled row that does not advance
@@ -13,9 +12,8 @@ the funnel can NEVER matter later — stages need strictly increasing
 (time, subsort), so a later stage can never consume an earlier row.
 Settled rows are therefore processed once and discarded; state is
 O(in-flight watermark window) per entity while matching and a O(1)
-tombstone after completion. Stragglers at-or-behind the settled
-high-water are dropped (bounded lateness; Spark keeps rows at exactly
-the watermark, so the machine enforces the drop itself).
+tombstone after completion. The buffer drops stragglers at-or-behind
+the settled high-water.
 
 Emission: ONE row per entity, at the micro-batch where the completing
 step settles — (key, t_<name> per step). Batch `match_funnel` rows with
@@ -35,11 +33,10 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
-
-_NEG = -(2**63)
+from kaskada_spark.streaming.buffer import NEG as _NEG, BufferSpec, apply_by_key, arm
 
 
 def funnel_stream(
@@ -90,68 +87,52 @@ def funnel_stream(
         + [T.StructField(f"t_{n}", T.TimestampType()) for n in names]
     )
     state_schema = T.StructType(
-        [
+        _FUNNEL_BUFFER.fields()
+        + [
             T.StructField("stage", T.IntegerType()),
             T.StructField("done", T.BooleanType()),
             T.StructField("hits_t", T.ArrayType(T.LongType())),
             T.StructField("hits_s", T.ArrayType(T.LongType())),
-            T.StructField("bt", T.ArrayType(T.LongType())),
-            T.StructField("bs", T.ArrayType(T.LongType())),
-            T.StructField("bf", T.ArrayType(T.LongType())),
-            T.StructField("settled_t", T.LongType()),
-            T.StructField("settled_s", T.LongType()),
         ]
     )
     func = _make_funnel_fn(k, within_ns, names, has_unless=unless is not None)
-    return pre.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return apply_by_key(pre, func, out_schema, state_schema)
+
+
+_FUNNEL_BUFFER = BufferSpec({"t": T.LongType(), "s": T.LongType(), "f": T.LongType()})
+
+
+def _flags(pdf: pd.DataFrame, n_flags: int) -> np.ndarray:
+    flags = np.zeros(len(pdf), dtype=np.int64)
+    for i in range(n_flags):
+        flags |= pdf[f"__p{i}"].to_numpy(dtype=np.int64) << i
+    return flags
 
 
 def _make_funnel_fn(
     k: int, within_ns: int | None, names: list[str], has_unless: bool = False
 ):
     n_flags = k + 1 if has_unless else k
+
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            stage, done, hits_t, hits_s, bt, bs, bf, settled_t, settled_s = state.get
-            hits_t, hits_s = list(hits_t), list(hits_s)
-            bt = np.asarray(bt, dtype=np.int64)
-            bs = np.asarray(bs, dtype=np.int64)
-            bf = np.asarray(bf, dtype=np.int64)
-        else:
-            stage, done = 0, False
-            hits_t, hits_s = [], []
-            bt = bs = bf = np.empty(0, dtype=np.int64)
-            settled_t, settled_s = _NEG, _NEG
+        buf, own = _FUNNEL_BUFFER.load(state)
+        stage, done, hits_t, hits_s = own or (0, False, [], [])
+        hits_t, hits_s = list(hits_t), list(hits_s)
 
         for pdf in pdfs:
             if done or pdf.empty:
                 continue
-            t = pdf[TIME].astype("int64").to_numpy()
-            s = pdf[SUBSORT].to_numpy(dtype=np.int64)
-            # straggler drop: at-or-behind the settled high-water
-            fresh = (t > settled_t) | ((t == settled_t) & (s > settled_s))
-            if not fresh.any():
-                continue
-            flags = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(n_flags):
-                flags |= pdf[f"__p{i}"].to_numpy(dtype=np.int64) << i
-            bt = np.concatenate([bt, t[fresh]])
-            bs = np.concatenate([bs, s[fresh]])
-            bf = np.concatenate([bf, flags[fresh]])
+            buf.absorb(pdf, f=_flags(pdf, n_flags))
 
         rows = None
         wm_ns = state.getCurrentWatermarkMs() * 10**6
-        if not done and len(bt):
-            order = np.lexsort((bs, bt))
-            bt, bs, bf = bt[order], bs[order], bf[order]
-            settled = bt <= wm_ns
-            n_settled = int(settled.sum())
+        if not done and len(buf):
+            n_settled = buf.settle(wm_ns)
             if n_settled:
-                st_, ss_, sf_ = bt[:n_settled], bs[:n_settled], bf[:n_settled]
+                head = buf.pop(n_settled)
+                st_, ss_, sf_ = head["t"], head["s"], head["f"]
                 u_t = u_s = None
                 # stage-loop advance (vectorized per stage, never per row)
                 while stage < k:
@@ -181,16 +162,13 @@ def _make_funnel_fn(
                     hits_t.append(int(st_[idx[0]]))
                     hits_s.append(int(ss_[idx[0]]))
                     stage += 1
-                settled_t = int(st_[-1])
-                settled_s = int(ss_[-1])
-                bt, bs, bf = bt[n_settled:], bs[n_settled:], bf[n_settled:]
                 if has_unless and u_t is not None and stage < k:
                     # a settled abort precedes every future row: dead
                     done = True
-                    bt = bs = bf = np.empty(0, dtype=np.int64)
+                    buf.clear()
                 if stage == k:
                     done = True
-                    bt = bs = bf = np.empty(0, dtype=np.int64)
+                    buf.clear()
                     rows = pd.DataFrame(
                         {
                             KEY: [key[0]],
@@ -210,27 +188,11 @@ def _make_funnel_fn(
             and wm_ns > hits_t[0] + within_ns
         ):
             done = True
-            bt = bs = bf = np.empty(0, dtype=np.int64)
+            buf.clear()
 
-        state.update(
-            (
-                int(stage),
-                bool(done),
-                [int(x) for x in hits_t],
-                [int(x) for x in hits_s],
-                [int(x) for x in bt],
-                [int(x) for x in bs],
-                [int(x) for x in bf],
-                int(settled_t),
-                int(settled_s),
-            )
-        )
-        if not done and len(bt):
-            # wake when the watermark passes the earliest unsettled row
-            # (1ms early — strict-inequality timer rule)
-            state.setTimeoutTimestamp(
-                max(int(bt.min()) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
+        _FUNNEL_BUFFER.save(state, buf, (int(stage), bool(done), hits_t, hits_s))
+        if not done:
+            arm(state, buf.cols["t"])
         if rows is not None:
             yield rows
 
@@ -337,6 +299,7 @@ def pattern_stream(
     buffer — O(watermark window), never the entity's history.
     Aggregate accumulators are float64 (exact for integer inputs up to
     2^53); batch ``match_pattern`` keeps the column's own sum type.
+    Null values don't fold, and an aggregate over only nulls is null.
     """
     steps = list(steps)
     spec, vidx = _build_pattern_spec(steps, within)
@@ -369,7 +332,8 @@ def pattern_stream(
         ]
     out_schema = T.StructType(out_fields)
     state_schema = T.StructType(
-        [
+        _pattern_buffer(spec["n_v"]).fields()
+        + [
             T.StructField("stage", T.IntegerType()),
             T.StructField("done", T.BooleanType()),
             T.StructField("emitted", T.BooleanType()),
@@ -386,18 +350,16 @@ def pattern_stream(
             T.StructField("obs_s", T.ArrayType(T.LongType())),
             T.StructField("plus_cnt", T.ArrayType(T.LongType())),
             T.StructField("plus_acc", T.ArrayType(T.DoubleType())),
-            T.StructField("bt", T.ArrayType(T.LongType())),
-            T.StructField("bs", T.ArrayType(T.LongType())),
-            T.StructField("bf", T.ArrayType(T.LongType())),
-            T.StructField("bv", T.ArrayType(T.DoubleType())),
-            T.StructField("settled_t", T.LongType()),
-            T.StructField("settled_s", T.LongType()),
+            T.StructField("plus_nn", T.ArrayType(T.LongType())),
         ]
     )
-    func = _make_pattern_fn(spec)
-    return pre.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return apply_by_key(pre, _make_pattern_fn(spec), out_schema, state_schema)
+
+
+def _pattern_buffer(n_v: int) -> BufferSpec:
+    keys = {"t": T.LongType(), "s": T.LongType(), "f": T.LongType()}
+    keys.update({f"v{j}": T.DoubleType() for j in range(n_v)})
+    return BufferSpec(keys)
 
 
 def _make_pattern_fn(spec: dict):
@@ -423,20 +385,18 @@ def _make_pattern_fn(spec: dict):
         0.0 if fn == "sum" else (np.inf if fn == "min" else -np.inf)
         for _pi, fn, _vj in acc_layout
     ]
+    buffer = _pattern_buffer(n_v)
 
     def update(key, pdfs, state: GroupState):
-        if state.exists:
+        buf, own = buffer.load(state)
+        if own is not None:
             (stage, done, emitted, hits_t, hits_s, firsts_t, firsts_s,
              cur_sub, cur_ft, cur_fs, cur_lt, cur_ls, obs_t, obs_s,
-             plus_cnt, plus_acc, bt, bs, bf, bv, settled_t, settled_s) = state.get
+             plus_cnt, plus_acc, plus_nn) = own
             hits_t, hits_s = list(hits_t), list(hits_s)
             firsts_t, firsts_s = list(firsts_t), list(firsts_s)
             obs_t, obs_s = list(obs_t), list(obs_s)
-            plus_cnt, plus_acc = list(plus_cnt), list(plus_acc)
-            bt = np.asarray(bt, dtype=np.int64)
-            bs = np.asarray(bs, dtype=np.int64)
-            bf = np.asarray(bf, dtype=np.int64)
-            bv = np.asarray(bv, dtype=np.float64).reshape(-1, n_v) if n_v else np.empty((len(bt), 0))
+            plus_cnt, plus_acc, plus_nn = list(plus_cnt), list(plus_acc), list(plus_nn)
         else:
             stage, done, emitted = 0, False, False
             hits_t, hits_s = [], []
@@ -446,41 +406,25 @@ def _make_pattern_fn(spec: dict):
             obs_s = [_NEG] * len(obs_steps)
             plus_cnt = [0] * len(plus_steps)
             plus_acc = list(acc_init)
-            bt = bs = bf = np.empty(0, dtype=np.int64)
-            bv = np.empty((0, n_v))
-            settled_t, settled_s = _NEG, _NEG
+            # non-null values folded into each accumulator
+            plus_nn = [0] * len(acc_layout)
 
         for pdf in pdfs:
             if done or pdf.empty:
                 continue
-            t = pdf[TIME].astype("int64").to_numpy()
-            s = pdf[SUBSORT].to_numpy(dtype=np.int64)
-            fresh = (t > settled_t) | ((t == settled_t) & (s > settled_s))
-            if not fresh.any():
-                continue
-            flags = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(n_steps + (1 if has_unless else 0)):
-                flags |= pdf[f"__p{i}"].to_numpy(dtype=np.int64) << i
-            v = (
-                np.column_stack([pdf[f"__v{j}"].to_numpy(dtype=np.float64) for j in range(n_v)])
-                if n_v else np.empty((len(pdf), 0))
+            buf.absorb(
+                pdf, f=_flags(pdf, n_steps + (1 if has_unless else 0)),
+                **{f"v{j}": pdf[f"__v{j}"].to_numpy(dtype=np.float64) for j in range(n_v)},
             )
-            bt = np.concatenate([bt, t[fresh]])
-            bs = np.concatenate([bs, s[fresh]])
-            bf = np.concatenate([bf, flags[fresh]])
-            bv = np.concatenate([bv, v[fresh]])
 
         rows = None
         abort_now = False
         wm_ns = state.getCurrentWatermarkMs() * 10**6
-        if not done and len(bt):
-            order = np.lexsort((bs, bt))
-            bt, bs, bf, bv = bt[order], bs[order], bf[order], bv[order]
-            settled = bt <= wm_ns
-            n_settled = int(settled.sum())
+        if not done and len(buf):
+            n_settled = buf.settle(wm_ns)
             if n_settled:
-                st_, ss_, sf_ = bt[:n_settled], bs[:n_settled], bf[:n_settled]
-                sv_ = bv[:n_settled]
+                head = buf.pop(n_settled)
+                st_, ss_, sf_ = head["t"], head["s"], head["f"]
                 # 0. pass-local abort instant (funnel rule): first
                 #    abort row strictly after the match anchor. Rows
                 #    settle in order, so by the end of this pass the
@@ -528,10 +472,14 @@ def _make_pattern_fn(spec: dict):
                     elif stage > 0:
                         pt, ps = hits_t[-1], hits_s[-1]
                         cand &= (st_ > pt) | ((st_ == pt) & (ss_ > ps))
-                    if within_ns is not None and (stage > 0 or cur_sub > 0):
+                    if within_ns is not None:
                         # horizon anchored at the match START: rank 0's
-                        # FIRST occurrence
-                        anchor_t = firsts_t[0] if stage > 0 else cur_ft
+                        # FIRST occurrence — this pass's first candidate
+                        # when no sub-occurrence is carried in yet
+                        if stage > 0 or cur_sub > 0:
+                            anchor_t = firsts_t[0] if stage > 0 else cur_ft
+                        else:
+                            anchor_t = int(st_[np.argmax(cand)])
                         cand &= st_ <= anchor_t + within_ns
                     idx = np.flatnonzero(cand)
                     take = need - cur_sub
@@ -602,7 +550,11 @@ def _make_pattern_fn(spec: dict):
                         for aj, (api, fn, vj) in enumerate(acc_layout):
                             if api != pi:
                                 continue
-                            vals = sv_[m, vj]
+                            vals = head[f"v{vj}"][m]
+                            vals = vals[~np.isnan(vals)]  # nulls don't fold
+                            if not len(vals):
+                                continue
+                            plus_nn[aj] += len(vals)
                             if fn == "sum":
                                 plus_acc[aj] += float(vals.sum())
                             elif fn == "min":
@@ -627,11 +579,6 @@ def _make_pattern_fn(spec: dict):
                     if len(idx):
                         obs_t[oi] = int(st_[idx[0]])
                         obs_s[oi] = int(ss_[idx[0]])
-                settled_t = int(st_[-1])
-                settled_s = int(ss_[-1])
-                bt, bs, bf, bv = (
-                    bt[n_settled:], bs[n_settled:], bf[n_settled:], bv[n_settled:],
-                )
                 # every future row follows a settled abort: the match
                 # is done (its trailing window closed at the abort) or
                 # dead — resolve within this invocation
@@ -653,23 +600,21 @@ def _make_pattern_fn(spec: dict):
                 # acc_layout is flat in (plus step, agg) declaration
                 # order, so the running cursor IS the slot index
                 for out, _fn, _vj in agg_outs[i]:
-                    vals[out] = [plus_acc[aj] if plus_cnt[pi] else None]
+                    vals[out] = [plus_acc[aj] if plus_nn[aj] else None]
                     aj += 1
             return pd.DataFrame(vals)
 
         if not done and stage == k:
             if not trailing_open:
                 done, rows = True, build_row()
-                bt = bs = bf = np.empty(0, dtype=np.int64)
-                bv = np.empty((0, n_v))
+                buf.clear()
             elif abort_now or (
                 within_ns is not None and wm_ns > firsts_t[0] + within_ns
             ):
                 # window closed: at the abort (all in-window rows
                 # settled before it) or at the horizon
                 done, rows = True, build_row()
-                bt = bs = bf = np.empty(0, dtype=np.int64)
-                bv = np.empty((0, n_v))
+                buf.clear()
         # dead entity: a settled abort (no later row can advance the
         # chain) or horizon passed without completing (a partial rank-0
         # sub-match anchors the horizon too)
@@ -685,35 +630,23 @@ def _make_pattern_fn(spec: dict):
             )
         ):
             done = True
-            bt = bs = bf = np.empty(0, dtype=np.int64)
-            bv = np.empty((0, n_v))
+            buf.clear()
 
-        state.update(
-            (
-                int(stage), bool(done), bool(rows is not None or emitted),
-                [int(x) for x in hits_t], [int(x) for x in hits_s],
-                [int(x) for x in firsts_t], [int(x) for x in firsts_s],
-                int(cur_sub), int(cur_ft), int(cur_fs), int(cur_lt), int(cur_ls),
-                [int(x) for x in obs_t], [int(x) for x in obs_s],
-                [int(x) for x in plus_cnt], [float(x) for x in plus_acc],
-                [int(x) for x in bt], [int(x) for x in bs],
-                [int(x) for x in bf], [float(x) for x in bv.ravel()],
-                int(settled_t), int(settled_s),
-            )
-        )
+        buffer.save(state, buf, (
+            int(stage), bool(done), bool(rows is not None or emitted),
+            [int(x) for x in hits_t], [int(x) for x in hits_s],
+            [int(x) for x in firsts_t], [int(x) for x in firsts_s],
+            int(cur_sub), int(cur_ft), int(cur_fs), int(cur_lt), int(cur_ls),
+            [int(x) for x in obs_t], [int(x) for x in obs_s],
+            [int(x) for x in plus_cnt], [float(x) for x in plus_acc], plus_nn,
+        ))
         if not done:
-            cands = []
-            if len(bt):
-                cands.append(int(bt.min()) // 10**6 - 1)
-            if stage == k and trailing_open:
-                cands.append((firsts_t[0] + within_ns) // 10**6)
-            elif within_ns is not None and (stage >= 1 or cur_sub > 0):
+            reach = list(buf.cols["t"])
+            if within_ns is not None and (stage >= 1 or cur_sub > 0):
+                # the horizon closes once the watermark passes it
                 a = firsts_t[0] if stage >= 1 else cur_ft
-                cands.append((a + within_ns) // 10**6)
-            if cands:
-                state.setTimeoutTimestamp(
-                    max(min(cands), state.getCurrentWatermarkMs() + 1)
-                )
+                reach.append(a + within_ns + 10**6)
+            arm(state, reach)
         if rows is not None:
             yield rows
 

@@ -1,31 +1,19 @@
 """Streaming entity-keyed as-of lookup join.
 
-The north-star pipeline requires "stateful as-of/lookup joins keyed by
-entity" in streaming form. This is the reference's
-LookupRequest/LookupResponse pair (operation/lookup_request.rs:25-32,
-lookup_response.rs:21-27) over live streams.
-
-Correctness requires time alignment: a request at time t may only be
-answered once no foreign row with time <= t can still arrive. The
-reference gets this by k-way-merging its input streams in global time
-order with bounded lateness (read/stream_reader.rs:47); Spark's
-equivalent signal is the query watermark (the min across both input
-streams). So the operator:
-
-1. unions requests (primary re-keyed by the foreign key) and foreign
-   rows, shuffled ONCE on the foreign key;
-2. buffers both sides in per-key state;
-3. on every trigger (and on event-time timeouts), SETTLES all buffered
-   rows at-or-before the watermark in (time, subsort, side) order —
-   foreign rows update the per-key snapshot, requests emit with the
-   snapshot value as of their instant (same-instant foreign rows order
-   first, matching the batch lowering in operators/lookup.py);
-4. keeps only unsettled rows (bounded by the watermark delay — state
-   is O(keys + in-flight window), never O(stream)).
+The reference's LookupRequest/LookupResponse pair
+(operation/lookup_request.rs:25-32, lookup_response.rs:21-27) over live
+streams. A request at time t may only be answered once no foreign row
+with time <= t can still arrive; Spark's signal for that is the query
+watermark (the min across both inputs). Requests (the primary re-keyed
+by the foreign key) and foreign rows are unioned, shuffled once on the
+foreign key, and wait in the settling buffer (streaming/buffer.py).
+Settling walks them in (time, subsort, side) order — same-instant
+foreign rows first, as in operators/lookup.py — and answers each
+request with the values of the last foreign row at or before it (a
+foreign null overwrites), else the per-key snapshot carried in state.
 
 Output contract: one row per request — (requesting key, _time,
-_subsort, *values). Join payload back on the order triple if needed
-(co-partitioned, no extra shuffle pressure).
+_subsort, *values). Join payload back on the order triple if needed.
 """
 
 from __future__ import annotations
@@ -38,9 +26,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.streaming.buffer import (
+    BufferSpec, apply_by_key, arm, carry, restore, ship, transport,
+)
 
 _IS_REQ = "__is_req"
 _ORIG = "__orig_key"
@@ -61,179 +52,80 @@ def asof_lookup_stream(
     ``(_key, _time, _subsort, *values)`` — the requesting entity's key.
     """
     key_c = F.col(key) if isinstance(key, str) else key
-    ftypes = dict(foreign.dtypes)
-
-    primary = primary.withWatermark(TIME, watermark)
-    foreign = foreign.withWatermark(TIME, watermark)
-
-    # Integral requesting keys ride as strings (lossless for any
-    # int64 — a bare nullable int column would go through pandas as
-    # float64 because of the union's null dat rows, corrupting keys
-    # beyond 2^53); every other type rides in its NATIVE form (float,
-    # string, bool, timestamp, binary, decimal all survive the
-    # Arrow->pandas trip with nulls intact).
     key_dt = primary.schema[KEY].dataType
-    integral_key = isinstance(
-        key_dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    )
-    orig_dt = T.StringType() if integral_key else key_dt
-    req = primary.select(
-        key_c.cast(ftypes[KEY]).alias(KEY),
+    vtypes = {v: foreign.schema[v].dataType for v in values}
+
+    req = primary.withWatermark(TIME, watermark).select(
+        key_c.cast(foreign.schema[KEY].dataType).alias(KEY),
         TIME,
         SUBSORT,
-        F.col(KEY).cast(orig_dt).alias(_ORIG),
+        ship(F.col(KEY), key_dt).alias(_ORIG),
         F.lit(True).alias(_IS_REQ),
-        *[F.lit(None).cast(ftypes[v]).alias(f"__f_{v}") for v in values],
+        *[ship(F.lit(None), dt).alias(f"__f_{v}") for v, dt in vtypes.items()],
     )
-    dat = foreign.select(
+    dat = foreign.withWatermark(TIME, watermark).select(
         KEY,
         TIME,
         SUBSORT,
-        F.lit(None).cast(orig_dt).alias(_ORIG),
+        ship(F.lit(None), key_dt).alias(_ORIG),
         F.lit(False).alias(_IS_REQ),
-        *[F.col(v).alias(f"__f_{v}") for v in values],
+        *[ship(F.col(v), dt).alias(f"__f_{v}") for v, dt in vtypes.items()],
     )
-    u = req.unionByName(dat)
-
     out_schema = T.StructType(
         [
-            T.StructField(KEY, primary.schema[KEY].dataType),
+            T.StructField(KEY, key_dt),
             T.StructField(TIME, T.TimestampType()),
             T.StructField(SUBSORT, T.LongType()),
         ]
-        + [T.StructField(v, foreign.schema[v].dataType) for v in values]
+        + [T.StructField(v, dt) for v, dt in vtypes.items()]
     )
-    # buffers live in state as parallel arrays; snapshot as scalars
+    # the per-key snapshot: one scalar per value
     state_schema = T.StructType(
-        [
-            T.StructField("have", T.BooleanType()),
-            T.StructField("req_t", T.ArrayType(T.LongType())),
-            T.StructField("req_s", T.ArrayType(T.LongType())),
-            T.StructField("req_k", T.ArrayType(orig_dt)),
-            T.StructField("for_t", T.ArrayType(T.LongType())),
-            T.StructField("for_s", T.ArrayType(T.LongType())),
-        ]
-        + [T.StructField(f"s_{v}", foreign.schema[v].dataType) for v in values]
-        + [T.StructField(f"b_{v}", T.ArrayType(foreign.schema[v].dataType)) for v in values]
-        + [T.StructField("settled_wm", T.LongType())]
+        _lookup_spec(key_dt, vtypes).fields()
+        + [T.StructField(f"s_{v}", transport(dt)) for v, dt in vtypes.items()]
     )
-    func = _make_lookup_fn(list(values), integral_key)
-    return u.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    func = _make_lookup_fn(key_dt, vtypes)
+    return apply_by_key(req.unionByName(dat), func, out_schema, state_schema)
+
+
+def _lookup_spec(key_dt: T.DataType, vtypes: dict) -> BufferSpec:
+    payload = {_ORIG: key_dt, **{f"__f_{v}": dt for v, dt in vtypes.items()}}
+    return BufferSpec(
+        {"t": T.LongType(), "s": T.LongType(), "req": T.BooleanType()}, payload, time_only=True
     )
 
 
-def _make_lookup_fn(values: list[str], integral_key: bool = False):
-    state_names = (
-        ["have", "req_t", "req_s", "req_k", "for_t", "for_s"]
-        + [f"s_{v}" for v in values]
-        + [f"b_{v}" for v in values]
-        + ["settled_wm"]
-    )
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+def _make_lookup_fn(key_dt: T.DataType, vtypes: dict):
+    spec = _lookup_spec(key_dt, vtypes)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {"have": bool(raw["have"]), }
-            for n in state_names[1:]:
-                v = raw[n]
-                if n.startswith(("req_", "for_", "b_")):
-                    st[n] = [] if v is None else list(v)
-                else:
-                    st[n] = v
-        else:
-            st = {"have": False, "req_t": [], "req_s": [], "req_k": [], "for_t": [], "for_s": []}
-            st.update({f"s_{v}": None for v in values})
-            st.update({f"b_{v}": [] for v in values})
-            st["settled_wm"] = None
-
-        # bounded-lateness drop: the snapshot and emitted requests have
-        # advanced through settled_wm; a straggler at-or-behind it
-        # (possible at exactly the watermark, which Spark does NOT drop
-        # upstream) would apply/emit out of order — discard it
-        hw = st["settled_wm"] if st["settled_wm"] is not None else -(2**63)
-        # 1. absorb incoming rows into the buffers
+        buf, snap = spec.load(state)
+        snap = list(snap or [None] * len(vtypes))
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            tns = pdf[TIME].astype("int64")
-            is_req = pdf[_IS_REQ].astype(bool)
-            for i in pdf.index:
-                if int(tns[i]) <= hw:
-                    continue
-                if is_req[i]:
-                    st["req_t"].append(int(tns[i]))
-                    st["req_s"].append(int(pdf[SUBSORT][i]))
-                    o = _native(pdf[_ORIG][i])
-                    st["req_k"].append(o)
-                else:
-                    st["for_t"].append(int(tns[i]))
-                    st["for_s"].append(int(pdf[SUBSORT][i]))
-                    for v in values:
-                        st[f"b_{v}"].append(_native(pdf[f"__f_{v}"][i]))
-
-        # 2. settle everything at-or-before the watermark, in global
-        # (time, subsort, side) order — foreign first at ties
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        settled_f = sorted(
-            [
-                (st["for_t"][i], st["for_s"][i], 0, i)
-                for i in range(len(st["for_t"]))
-                if st["for_t"][i] <= wm_ns
-            ]
-        )
-        settled_r = [
-            (st["req_t"][i], st["req_s"][i], 1, i)
-            for i in range(len(st["req_t"]))
-            if st["req_t"][i] <= wm_ns
-        ]
-        merged = sorted(settled_f + settled_r)
-        out_rows = []
-        for t, s_, side, i in merged:
-            if side == 0:
-                st["have"] = True
-                for v in values:
-                    st[f"s_{v}"] = st[f"b_{v}"][i]
-            else:
-                k = st["req_k"][i]
-                out_rows.append(
-                    {
-                        KEY: int(k) if (integral_key and k is not None) else k,
-                        TIME: pd.Timestamp(t),
-                        SUBSORT: s_,
-                        **{v: st[f"s_{v}"] for v in values},
-                    }
-                )
-
-        if merged:
-            st["settled_wm"] = int(max(hw, merged[-1][0]))
-        # 3. retain only unsettled rows
-        keep_f = [i for i in range(len(st["for_t"])) if st["for_t"][i] > wm_ns]
-        keep_r = [i for i in range(len(st["req_t"])) if st["req_t"][i] > wm_ns]
-        st["for_t"], st["for_s"] = [st["for_t"][i] for i in keep_f], [st["for_s"][i] for i in keep_f]
-        for v in values:
-            st[f"b_{v}"] = [st[f"b_{v}"][i] for i in keep_f]
-        st["req_t"], st["req_s"], st["req_k"] = (
-            [st["req_t"][i] for i in keep_r],
-            [st["req_s"][i] for i in keep_r],
-            [st["req_k"][i] for i in keep_r],
-        )
-
-        state.update(tuple(st[n] for n in state_names))
-        pending = st["req_t"] + st["for_t"]
-        if pending:
-            # wake when the watermark reaches the earliest pending row
-            # (1ms early — timers fire only when wm moves strictly past)
-            wm_ms = state.getCurrentWatermarkMs()
-            state.setTimeoutTimestamp(max(min(pending) // 10**6 - 1, wm_ms + 1))
-
-        if out_rows:
-            yield pd.DataFrame(out_rows)
+            if len(pdf):
+                buf.absorb(pdf, req=pdf[_IS_REQ].to_numpy(bool))
+        rows = buf.pop(buf.settle(state.getCurrentWatermarkMs() * 10**6, ("t", "s", "req")))
+        req = rows["req"]
+        answers = {
+            v: carry(rows[f"p___f_{v}"], ~req, snap[i]) for i, v in enumerate(vtypes)
+        }
+        if len(req):
+            snap = [a[-1] for a in answers.values()]
+        out = None
+        if req.any():
+            out = pd.DataFrame(
+                {
+                    KEY: restore(rows[f"p_{_ORIG}"][req], key_dt),
+                    TIME: pd.to_datetime(rows["t"][req]),
+                    SUBSORT: rows["s"][req],
+                    **{v: restore(answers[v][req], dt) for v, dt in vtypes.items()},
+                }
+            )
+        spec.save(state, buf, tuple(snap))
+        arm(state, buf.cols["t"])
+        if out is not None:
+            yield out
 
     return update

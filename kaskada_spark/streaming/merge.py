@@ -4,21 +4,13 @@ The reference's Merge operation — its only binary operator — union-
 aligns two sorted streams onto one row domain and spreads each side's
 columns with null (discrete) or as-of (latched) interpolation
 (operation/merge.rs:27-46, spread.rs:363-430). The batch lowering is a
-full outer join + fill window (operators/merge.py); this is the live
-equivalent:
-
-1. both streams are tagged and unioned, shuffled ONCE on the entity;
-2. rows buffer in per-entity state until the combined watermark (Spark
-   takes the min across both inputs) passes them — so a late-but-in-
-   watermark row on either side still lands in order;
-3. settled rows merge on (time, subsort): coincident left/right rows
-   fuse into ONE output row (the full-outer-join-on-triple rule);
-4. ``as_of`` columns forward-fill from per-entity latches carried in
-   state, all other columns stay null at rows from the other side.
-
-State is O(in-flight window + as_of latches) per entity, flushed by
-event-time timers during silence. Settling is vectorized pandas (outer
-merge + sort + ffill), not per-row Python.
+full outer join + fill window (operators/merge.py); live, both streams
+are tagged, unioned and shuffled once on the entity, and rows wait in
+the settling buffer (streaming/buffer.py) until the combined watermark
+passes them. Settling fuses coincident left/right rows on (time,
+subsort) into one output row (the full-outer-join-on-triple rule) and
+forward-fills ``as_of`` columns from per-entity latches carried in
+state; all other columns stay null at rows from the other side.
 """
 
 from __future__ import annotations
@@ -26,14 +18,18 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.streaming.buffer import (
+    BufferSpec, apply_by_key, arm, carry, restore, ship, transport,
+)
 
 _SIDE = "__side"
 
@@ -57,191 +53,87 @@ def merge_align_stream(
     overlap = set(lcols) & set(rcols)
     lmap = {c: (c + suffixes[0] if c in overlap else c) for c in lcols}
     rmap = {c: (c + suffixes[1] if c in overlap else c) for c in rcols}
-    lout = [lmap[c] for c in lcols]
-    rout = [rmap[c] for c in rcols]
+    ltypes = {lmap[c]: left.schema[c].dataType for c in lcols}
+    rtypes = {rmap[c]: right.schema[c].dataType for c in rcols}
     for c in as_of:
-        if c not in lout + rout:
+        if c not in {**ltypes, **rtypes}:
             raise ValueError(f"as_of column {c!r} not in merged output")
+    # output column -> (from the left side?, source column)
+    source = {**{lmap[c]: (True, c) for c in lcols}, **{rmap[c]: (False, c) for c in rcols}}
+    types = {**ltypes, **rtypes}
 
-    # integral value columns ride as STRINGS through the union/state
-    # (lossless for any int64 — nullable int columns go through pandas
-    # as float64, corrupting values beyond 2^53; see streaming/join.py)
-    integral = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+    def tagged(frame: DataFrame, is_left: bool) -> DataFrame:
+        return frame.withWatermark(TIME, watermark).select(
+            KEY, TIME, SUBSORT, F.lit(is_left).alias(_SIDE),
+            *[ship(F.col(c) if mine == is_left else F.lit(None), types[n]).alias(n)
+              for n, (mine, c) in source.items()],
+        )
 
-    def _transport(schema, c):
-        dt = schema[c].dataType
-        return (T.StringType(), True) if isinstance(dt, integral) else (dt, False)
-
-    l_tp = {c: _transport(left.schema, c) for c in lcols}
-    r_tp = {c: _transport(right.schema, c) for c in rcols}
-    int_out = {lmap[c] for c in lcols if l_tp[c][1]} | {rmap[c] for c in rcols if r_tp[c][1]}
-
-    left = left.withWatermark(TIME, watermark)
-    right = right.withWatermark(TIME, watermark)
-    lsel = left.select(
-        KEY, TIME, SUBSORT, F.lit(True).alias(_SIDE),
-        *[F.col(c).cast(l_tp[c][0]).alias(lmap[c]) for c in lcols],
-        *[F.lit(None).cast(r_tp[c][0]).alias(rmap[c]) for c in rcols],
-    )
-    rsel = right.select(
-        KEY, TIME, SUBSORT, F.lit(False).alias(_SIDE),
-        *[F.lit(None).cast(l_tp[c][0]).alias(lmap[c]) for c in lcols],
-        *[F.col(c).cast(r_tp[c][0]).alias(rmap[c]) for c in rcols],
-    )
-    u = lsel.unionByName(rsel)
-
-    out_fields = [
-        T.StructField(KEY, left.schema[KEY].dataType),
-        T.StructField(TIME, T.TimestampType()),
-        T.StructField(SUBSORT, T.LongType()),
-    ]
-    for c in lcols:
-        out_fields.append(T.StructField(lmap[c], left.schema[c].dataType))
-    for c in rcols:
-        out_fields.append(T.StructField(rmap[c], right.schema[c].dataType))
-    out_schema = T.StructType(out_fields)
-
-    transport_types = {lmap[c]: l_tp[c][0] for c in lcols}
-    transport_types.update({rmap[c]: r_tp[c][0] for c in rcols})
-    state_schema = T.StructType(
+    out_schema = T.StructType(
         [
-            T.StructField("t", T.ArrayType(T.LongType())),
-            T.StructField("s", T.ArrayType(T.LongType())),
-            T.StructField("is_l", T.ArrayType(T.BooleanType())),
+            T.StructField(KEY, left.schema[KEY].dataType),
+            T.StructField(TIME, T.TimestampType()),
+            T.StructField(SUBSORT, T.LongType()),
         ]
-        + [T.StructField(f"b_{n}", T.ArrayType(dt)) for n, dt in transport_types.items()]
-        + [T.StructField(f"latch_{c}", transport_types[c]) for c in as_of]
-        + [T.StructField("settled_wm", T.LongType())]
+        + [T.StructField(n, dt) for n, dt in types.items()]
     )
-    func = _make_merge_fn(lout, rout, list(as_of), int_out)
-    return u.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    state_schema = T.StructType(
+        _merge_spec(types).fields()
+        + [T.StructField(f"latch_{c}", transport(types[c])) for c in as_of]
+    )
+    func = _make_merge_fn(ltypes, rtypes, list(as_of))
+    return apply_by_key(
+        tagged(left, True).unionByName(tagged(right, False)), func, out_schema, state_schema
     )
 
 
-def _make_merge_fn(lout: list[str], rout: list[str], as_of: list[str], int_out=frozenset()):
-    value_names = lout + rout
-    state_names = (
-        ["t", "s", "is_l"]
-        + [f"b_{n}" for n in value_names]
-        + [f"latch_{c}" for c in as_of]
-        + ["settled_wm"]
+def _merge_spec(types: dict) -> BufferSpec:
+    return BufferSpec(
+        {"t": T.LongType(), "s": T.LongType(), "is_l": T.BooleanType()}, types, time_only=True
     )
-    scalar_names = {f"latch_{c}" for c in as_of} | {"settled_wm"}
 
-    def _native(x):
-        # pd.isna catches NaN, None AND NaT (timestamp payload columns
-        # carry NaT at other-side rows; a bare float check misses it and
-        # NaT poisons the Arrow state serializer)
-        if x is None:
-            return None
-        try:
-            if pd.isna(x):
-                return None
-        except (TypeError, ValueError):
-            pass
-        return x.item() if hasattr(x, "item") else x
+
+def _make_merge_fn(ltypes: dict, rtypes: dict, as_of: list[str]):
+    types = {**ltypes, **rtypes}
+    spec = _merge_spec(types)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {
-                n: (raw[n] if n in scalar_names else ([] if raw[n] is None else list(raw[n])))
-                for n in state_names
-            }
-        else:
-            st = {n: [] for n in state_names if n not in scalar_names}
-            st.update({f"latch_{c}": None for c in as_of})
-            st["settled_wm"] = None
-
-        # bounded-lateness drop: output through settled_wm has already
-        # been emitted (and the as-of latches advanced past it), so a
-        # straggler at-or-behind it — possible at exactly the watermark,
-        # which Spark does NOT drop upstream — is discarded rather than
-        # emitted out of order (the reference's stream_reader.rs:47 rule)
-        hw = st["settled_wm"] if st["settled_wm"] is not None else -(2**63)
+        buf, latches = spec.load(state)
+        latches = list(latches or [None] * len(as_of))
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            tns = pdf[TIME].astype("int64")
-            is_l = pdf[_SIDE].astype(bool)
-            for i in pdf.index:
-                if int(tns[i]) <= hw:
-                    continue
-                st["t"].append(int(tns[i]))
-                st["s"].append(int(pdf[SUBSORT][i]))
-                st["is_l"].append(bool(is_l[i]))
-                for n in value_names:
-                    st[f"b_{n}"].append(_native(pdf[n][i]))
-
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        settled = [i for i in range(len(st["t"])) if st["t"][i] <= wm_ns]
+            if len(pdf):
+                buf.absorb(pdf, is_l=pdf[_SIDE].to_numpy(bool))
+        n = buf.settle(state.getCurrentWatermarkMs() * 10**6)
         out = None
-        if settled:
-            frames = []
-            for side, cols in ((True, lout), (False, rout)):
-                idx = [i for i in settled if st["is_l"][i] == side]
-                if not idx:
-                    continue
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "t": [st["t"][i] for i in idx],
-                            "s": [st["s"][i] for i in idx],
-                            **{n: [st[f"b_{n}"][i] for i in idx] for n in cols},
-                        }
-                    ).set_index(["t", "s"])
-                )
-            if len(frames) == 2:
-                merged = frames[0].join(frames[1], how="outer")
-            else:
-                merged = frames[0]
-                for n in value_names:
-                    if n not in merged.columns:
-                        merged[n] = None
-            merged = merged.sort_index().reset_index()
-            for c in as_of:
-                if c not in merged.columns:
-                    merged[c] = None
-                col = merged[c]
-                filled = col.ffill()
-                latch = st[f"latch_{c}"]
-                if latch is not None:
-                    filled = filled.fillna(latch)
-                merged[c] = filled
-                tail = merged[c]
-                st[f"latch_{c}"] = (
-                    None if tail.empty or pd.isna(tail.iloc[-1]) else _native(tail.iloc[-1])
-                )
-            def _restore(n):
-                col = merged[n] if n in merged.columns else pd.Series(None, index=merged.index, dtype=object)
-                if n in int_out:
-                    col = col.map(lambda v: None if v is None or pd.isna(v) else int(v))
-                return col
-
+        if n:
+            rows = buf.pop(n)
+            t, s, is_l = rows["t"], rows["s"], rows["is_l"]
+            # fuse coincident (t, s) rows: one output row per group
+            first = np.r_[True, (t[1:] != t[:-1]) | (s[1:] != s[:-1])]
+            group = np.cumsum(first) - 1
+            vals = {}
+            for names, side in ((ltypes, is_l), (rtypes, ~is_l)):
+                for c in names:
+                    col = np.full(int(group[-1]) + 1, None, dtype=object)
+                    col[group[side]] = rows[f"p_{c}"][side]
+                    vals[c] = col
+            for i, c in enumerate(as_of):
+                # as-of latches skip nulls
+                vals[c] = carry(vals[c], pd.notna(vals[c]), latches[i])
+                latches[i] = vals[c][-1]
             out = pd.DataFrame(
                 {
-                    KEY: k,
-                    TIME: pd.to_datetime(merged["t"]),
-                    SUBSORT: merged["s"],
-                    **{n: _restore(n) for n in value_names},
+                    KEY: key[0],
+                    TIME: pd.to_datetime(t[first]),
+                    SUBSORT: s[first],
+                    **{c: restore(vals[c], dt) for c, dt in types.items()},
                 }
             )
-            keep = [i for i in range(len(st["t"])) if st["t"][i] > wm_ns]
-            for n in ["t", "s", "is_l"] + [f"b_{n}" for n in value_names]:
-                st[n] = [st[n][i] for i in keep]
-            st["settled_wm"] = int(max(hw, int(merged["t"].max())))
-
-        state.update(tuple(st[n] for n in state_names))
-        if st["t"]:
-            # 1ms early — timers fire only when wm moves strictly past
-            state.setTimeoutTimestamp(
-                max(min(st["t"]) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if out is not None and len(out):
+        spec.save(state, buf, tuple(latches))
+        arm(state, buf.cols["t"])
+        if out is not None:
             yield out
 
     return update

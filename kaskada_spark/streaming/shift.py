@@ -1,35 +1,62 @@
-"""Streaming shift_to / shift_by: state-buffered re-timing.
+"""Streaming shift_to / shift_by / shift_until: state-buffered re-timing.
 
-The reference's ShiftTo operation moves rows forward to a computed
-future time, buffering pending rows until the stream reaches that time
-(operation/shift_to.rs:28-60 — including its PERFORMANCE note about
-unbounded buffering). Streaming rendering: rows wait in per-entity
-state until the event-time watermark passes their target time, then
-re-emit with ``_time = target`` — the watermark is exactly the "stream
-has reached this time" signal, and event-time timeouts wake silent
-entities so buffered rows flush without new input.
-
-Null or backward targets are dropped before the stateful stage (same
-rule as the batch operator, operators/shift.py). Buffer growth is the
-same hazard the reference flags: rows shifted far into the future hold
-state until the watermark catches up — O(in-flight shifted rows) per
-entity, bounded by how far ahead targets run, not by stream length.
+The reference's ShiftTo moves rows forward to a computed future time,
+buffering them until the stream reaches it (operation/shift_to.rs:28-60
+— including its PERFORMANCE note about unbounded buffering); ShiftUntil
+holds rows until the entity's next predicate firing
+(operation/shift_until.rs). Rows wait in the settling buffer
+(streaming/buffer.py): the watermark is exactly the "stream has reached
+this time" signal, and event-time timeouts flush silent entities.
 """
 
 from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 
 from kaskada_spark.prepare import KEY, SUBSORT, TIME
+from kaskada_spark.streaming.buffer import (
+    BufferSpec, apply_by_key, arm, restore, ship, time_ns,
+)
 
 _TARGET = "__shift_target"
+_PRED = "__shift_pred"
+
+
+def _shift_plan(tdf: DataFrame, marker: Column, spec_of):
+    """Select + schemas shared by both machines: payload columns ride in
+    their transport type, ``marker`` (target or predicate) beside them."""
+    payload = {c: tdf.schema[c].dataType for c in tdf.columns if c not in (TIME, SUBSORT, KEY)}
+    frame = tdf.select(
+        TIME, SUBSORT, KEY, *[ship(F.col(c), dt).alias(c) for c, dt in payload.items()], marker
+    )
+    out_schema = T.StructType(
+        [
+            T.StructField(TIME, T.TimestampType()),
+            T.StructField(SUBSORT, T.LongType()),
+            T.StructField(KEY, tdf.schema[KEY].dataType),
+        ]
+        + [tdf.schema[c] for c in payload]
+    )
+    return frame, payload, out_schema, T.StructType(spec_of(payload).fields())
+
+
+def _emit(k, t: np.ndarray, rows: dict, payload: dict) -> pd.DataFrame:
+    return pd.DataFrame(
+        {
+            TIME: pd.to_datetime(t),
+            SUBSORT: rows["s"],
+            KEY: k,
+            **{c: restore(rows[f"p_{c}"], dt) for c, dt in payload.items()},
+        }
+    )
 
 
 def shift_to_stream(
@@ -40,7 +67,8 @@ def shift_to_stream(
 ) -> DataFrame:
     """Re-time each row to ``new_time`` (>= its current time), emitting
     it once the watermark passes the target. Output keeps the universal
-    shape with ``_time`` = the target time.
+    shape with ``_time`` = the target time. Null or backward targets are
+    dropped before the stateful stage (same rule as operators/shift.py).
 
     ``max_buffered_rows`` is the guard for the reference's documented
     unbounded-buffering hazard (shift_to.rs PERFORMANCE note): targets
@@ -49,30 +77,14 @@ def shift_to_stream(
     clear error instead of growing state silently — fail-fast
     backpressure; dropping would silently change results."""
     tdf = tdf.withWatermark(TIME, watermark)
-    buffered = tdf.withColumn(_TARGET, new_time.cast("timestamp")).filter(
-        F.col(_TARGET).isNotNull() & (F.col(_TARGET) >= F.col(TIME))
+    target = new_time.cast("timestamp")
+    frame, payload, out_schema, state_schema = _shift_plan(
+        tdf.filter(target.isNotNull() & (target >= F.col(TIME))),
+        target.alias(_TARGET),
+        _shift_to_spec,
     )
-    payload = [c for c in tdf.columns if c not in (TIME, SUBSORT, KEY)]
-    out_schema = T.StructType(
-        [
-            T.StructField(TIME, T.TimestampType()),
-            T.StructField(SUBSORT, T.LongType()),
-            T.StructField(KEY, tdf.schema[KEY].dataType),
-        ]
-        + [tdf.schema[c] for c in payload]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("tgt", T.ArrayType(T.LongType())),
-            T.StructField("ot", T.ArrayType(T.LongType())),
-            T.StructField("os", T.ArrayType(T.LongType())),
-        ]
-        + [T.StructField(f"p_{c}", T.ArrayType(tdf.schema[c].dataType)) for c in payload]
-        + [T.StructField("settled_tgt", T.LongType())]
-    )
-    func = _make_shift_fn(payload, max_buffered_rows)
-    return buffered.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
+    return apply_by_key(
+        frame, _make_shift_fn(payload, max_buffered_rows), out_schema, state_schema
     )
 
 
@@ -88,224 +100,79 @@ def shift_by_stream(
     )
 
 
-_PRED = "__shift_pred"
-
-
 def shift_until_stream(
     tdf: DataFrame,
     predicate: Column,
     watermark: str = "0 seconds",
 ) -> DataFrame:
-    """Streaming shift_until (reference operation/shift_until.rs): buffer
-    each row per entity until the first at-or-later row where
-    ``predicate`` fires, then emit all buffered rows at that row's time
-    (original subsorts kept — matches the batch operator exactly).
-
-    Rows settle only once the watermark passes the firing row, so a
-    late-but-in-watermark row can still slot between a buffered row and
-    its firing. Rows whose firing hasn't arrived stay in state (the
-    reference holds them to end-of-input); state is O(rows since last
-    firing) per entity."""
+    """Streaming shift_until: buffer each row per entity until the first
+    at-or-later row where ``predicate`` fires, then emit all buffered
+    rows at that row's time (original subsorts kept — matches the batch
+    operator exactly). Rows whose firing hasn't arrived stay in state
+    (the reference holds them to end-of-input)."""
     tdf = tdf.withWatermark(TIME, watermark)
-    buffered = tdf.withColumn(_PRED, F.coalesce(predicate, F.lit(False)))
-    payload = [c for c in tdf.columns if c not in (TIME, SUBSORT, KEY)]
-    out_schema = T.StructType(
-        [
-            T.StructField(TIME, T.TimestampType()),
-            T.StructField(SUBSORT, T.LongType()),
-            T.StructField(KEY, tdf.schema[KEY].dataType),
-        ]
-        + [tdf.schema[c] for c in payload]
+    frame, payload, out_schema, state_schema = _shift_plan(
+        tdf, F.coalesce(predicate, F.lit(False)).alias(_PRED), _shift_until_spec
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("ot", T.ArrayType(T.LongType())),
-            T.StructField("os", T.ArrayType(T.LongType())),
-            T.StructField("pred", T.ArrayType(T.BooleanType())),
-        ]
-        + [T.StructField(f"p_{c}", T.ArrayType(tdf.schema[c].dataType)) for c in payload]
-        + [T.StructField("hw_t", T.LongType()), T.StructField("hw_s", T.LongType())]
-    )
-    func = _make_shift_until_fn(payload)
-    return buffered.groupBy(KEY).applyInPandasWithState(
-        func, out_schema, state_schema, "append", GroupStateTimeout.EventTimeTimeout
-    )
+    return apply_by_key(frame, _make_shift_until_fn(payload), out_schema, state_schema)
 
 
-def _make_shift_until_fn(payload: list[str]):
-    arr_names = ["ot", "os", "pred"] + [f"p_{c}" for c in payload]
-    state_names = arr_names + ["hw_t", "hw_s"]
+def _shift_to_spec(payload: dict) -> BufferSpec:
+    # t is the target; coincident targets keep their original order
+    keys = {"t": T.LongType(), "s": T.LongType(), "ot": T.LongType()}
+    return BufferSpec(keys, payload, time_only=True)
 
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+
+def _shift_until_spec(payload: dict) -> BufferSpec:
+    return BufferSpec({"t": T.LongType(), "s": T.LongType(), "pred": T.BooleanType()}, payload)
+
+
+def _make_shift_fn(payload: dict, max_buffered_rows: int | None = None):
+    spec = _shift_to_spec(payload)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {n: ([] if raw[n] is None else list(raw[n])) for n in arr_names}
-            st["hw_t"], st["hw_s"] = raw["hw_t"], raw["hw_s"]
-        else:
-            st = {n: [] for n in arr_names}
-            st["hw_t"] = st["hw_s"] = None
-
-        # bounded-lateness drop: rows at-or-behind the last SETTLED
-        # firing (possible at exactly the watermark — Spark doesn't drop
-        # those upstream) would have been emitted with that firing;
-        # discard instead of emitting them out of order
-        hw = (
-            (st["hw_t"], st["hw_s"])
-            if st["hw_t"] is not None
-            else (-(2**63), -(2**63))
-        )
+        buf, _ = spec.load(state)
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            t_ns = pdf[TIME].astype("int64")
-            for i in pdf.index:
-                if (int(t_ns[i]), int(pdf[SUBSORT][i])) <= hw:
-                    continue
-                st["ot"].append(int(t_ns[i]))
-                st["os"].append(int(pdf[SUBSORT][i]))
-                st["pred"].append(bool(pdf[_PRED][i]))
-                for c in payload:
-                    st[f"p_{c}"].append(_native(pdf[c][i]))
-
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        order = sorted(range(len(st["ot"])), key=lambda i: (st["ot"][i], st["os"][i]))
-        # settled firings: predicate rows the watermark has passed
-        firings = [
-            (st["ot"][i], st["os"][i])
-            for i in order
-            if st["pred"][i] and st["ot"][i] <= wm_ns
-        ]
-        emitted_idx: list[int] = []
-        rows: list[dict] = []
-        if firings:
-            fi = 0
-            for i in order:
-                okey = (st["ot"][i], st["os"][i])
-                while fi < len(firings) and firings[fi] < okey:
-                    fi += 1
-                if fi >= len(firings):
-                    break  # no settled firing at-or-after this row: keep
-                rows.append(
-                    {
-                        TIME: pd.Timestamp(firings[fi][0]),
-                        SUBSORT: st["os"][i],
-                        KEY: k,
-                        **{c: st[f"p_{c}"][i] for c in payload},
-                    }
+            if len(pdf):
+                buf.absorb(pdf, t=time_ns(pdf, _TARGET), ot=time_ns(pdf))
+            if max_buffered_rows is not None and len(buf) > max_buffered_rows:
+                raise RuntimeError(
+                    f"shift_to buffer for entity {key[0]!r} exceeded "
+                    f"max_buffered_rows={max_buffered_rows} "
+                    f"({len(buf)} rows in flight) — targets are "
+                    "running too far ahead of the watermark"
                 )
-                emitted_idx.append(i)
-        if emitted_idx:
-            emitted = set(emitted_idx)
-            keep = [i for i in range(len(st["ot"])) if i not in emitted]
-            for n in arr_names:
-                st[n] = [st[n][i] for i in keep]
-        if firings:
-            st["hw_t"], st["hw_s"] = max(hw, firings[-1])
-
-        state.update(tuple(st[n] for n in state_names))
-        pending_preds = [
-            st["ot"][i] for i in range(len(st["ot"])) if st["pred"][i]
-        ]
-        if pending_preds:
-            # wake when the watermark passes the earliest unsettled
-            # firing (1ms early — strict-inequality timer rule)
-            state.setTimeoutTimestamp(
-                max(min(pending_preds) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
-        if rows:
-            yield pd.DataFrame(rows)
+        rows = buf.pop(buf.settle(state.getCurrentWatermarkMs() * 10**6, ("t", "ot", "s")))
+        spec.save(state, buf)
+        arm(state, buf.cols["t"])
+        if len(rows["t"]):
+            yield _emit(key[0], rows["t"], rows, payload)
 
     return update
 
 
-def _make_shift_fn(payload: list[str], max_buffered_rows: int | None = None):
-    arr_names = ["tgt", "ot", "os"] + [f"p_{c}" for c in payload]
-    state_names = arr_names + ["settled_tgt"]
-
-    def _native(x):
-        if x is None or (isinstance(x, float) and pd.isna(x)):
-            return None
-        return x.item() if hasattr(x, "item") else x
+def _make_shift_until_fn(payload: dict):
+    spec = _shift_until_spec(payload)
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        k = key[0]
-        if state.exists:
-            raw = dict(zip(state_names, state.get))
-            st = {n: ([] if raw[n] is None else list(raw[n])) for n in arr_names}
-            st["settled_tgt"] = raw["settled_tgt"]
-        else:
-            st = {n: [] for n in arr_names}
-            st["settled_tgt"] = None
-
-        # bounded-lateness drop: output through settled_tgt is already
-        # emitted; a straggler whose target lands at-or-behind it (rows
-        # at exactly the watermark are NOT dropped by Spark upstream)
-        # would re-time out of order — discard it instead
-        hw = st["settled_tgt"] if st["settled_tgt"] is not None else -(2**63)
+        buf, _ = spec.load(state)
         for pdf in pdfs:
-            if pdf.empty:
-                continue
-            tgt_ns = pdf[_TARGET].astype("int64")
-            t_ns = pdf[TIME].astype("int64")
-            for i in pdf.index:
-                if int(tgt_ns[i]) <= hw:
-                    continue
-                st["tgt"].append(int(tgt_ns[i]))
-                st["ot"].append(int(t_ns[i]))
-                st["os"].append(int(pdf[SUBSORT][i]))
-                for c in payload:
-                    st[f"p_{c}"].append(_native(pdf[c][i]))
-            if max_buffered_rows is not None and len(st["tgt"]) > max_buffered_rows:
-                raise RuntimeError(
-                    f"shift_to buffer for entity {k!r} exceeded "
-                    f"max_buffered_rows={max_buffered_rows} "
-                    f"({len(st['tgt'])} rows in flight) — targets are "
-                    "running too far ahead of the watermark"
-                )
-
-        wm_ns = state.getCurrentWatermarkMs() * 10**6
-        # emit rows whose target the watermark has passed, ordered by
-        # (target, original time, original subsort) — coincident shifted
-        # rows keep their original relative order (shift_to.rs contract)
-        due = sorted(
-            (st["tgt"][i], st["ot"][i], st["os"][i], i)
-            for i in range(len(st["tgt"]))
-            if st["tgt"][i] <= wm_ns
-        )
-        if due:
-            rows = [
-                {
-                    TIME: pd.Timestamp(t),
-                    SUBSORT: s_,
-                    KEY: k,
-                    **{c: st[f"p_{c}"][i] for c in payload},
-                }
-                for t, _, s_, i in due
-            ]
-            keep = [i for i in range(len(st["tgt"])) if st["tgt"][i] > wm_ns]
-            for n in arr_names:
-                st[n] = [st[n][i] for i in keep]
-            st["settled_tgt"] = int(max(hw, due[-1][0]))
-            yield pd.DataFrame(rows)
-
-        state.update(tuple(st[n] for n in state_names))
-        if st["tgt"]:
-            # arm 1ms EARLY: Spark fires event-time timers only when the
-            # watermark moves strictly beyond the timestamp, so a timer
-            # set exactly at the target would never fire when the final
-            # watermark lands on it
-            state.setTimeoutTimestamp(
-                max(min(st["tgt"]) // 10**6 - 1, state.getCurrentWatermarkMs() + 1)
-            )
+            if len(pdf):
+                buf.absorb(pdf, pred=pdf[_PRED].to_numpy(bool))
+        # rows up to the last settled firing emit, each at the first
+        # firing at or after it
+        n = buf.settle(state.getCurrentWatermarkMs() * 10**6)
+        fired = np.flatnonzero(buf.cols["pred"][:n])
+        rows = buf.pop(fired[-1] + 1 if len(fired) else 0)
+        spec.save(state, buf)
+        arm(state, buf.cols["t"][buf.cols["pred"]])
+        if len(rows["t"]):
+            m = len(rows["t"])
+            nxt = np.minimum.accumulate(np.where(rows["pred"], np.arange(m), m)[::-1])[::-1]
+            yield _emit(key[0], rows["t"][nxt], rows, payload)
 
     return update

@@ -1094,3 +1094,51 @@ def test_stream_pattern_unless_equals_batch(spark, tmp_path):
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
     }
     assert got == expected
+
+
+def test_pattern_machine_plus_aggregates_skip_nulls(spark):
+    """A `+` step's sum/min/max skip null values and are null when every
+    consumed value is null (count stays the number of consumed rows) —
+    the streaming machine equals match_pattern on the same rows, for
+    every micro-batch cut."""
+    import pandas as pd
+
+    from kaskada_spark.operators.cep import PatternStep, match_pattern
+
+    from tests.test_state_machine_property import _drive_pattern
+
+    per_entity = {
+        "all_null": [(0, 0, "a", None), (1, 1, "b", None), (2, 2, "b", None),
+                     (3, 3, "c", None)],
+        "some_null": [(0, 0, "a", 1.5), (1, 1, "b", None), (2, 2, "b", 5.0),
+                      (3, 3, "c", None)],
+        "mixed": [(0, 0, "a", None), (1, 1, "b", 3.0), (2, 2, "b", None),
+                  (3, 3, "b", -2.0), (4, 4, "c", 9.0)],
+    }
+    fns = ("sum", "min", "max")
+    base = dt.datetime(2024, 1, 1)
+    df = spark.createDataFrame(
+        [(e, base + dt.timedelta(seconds=t), s, lbl, v)
+         for e, rows in per_entity.items() for t, s, lbl, v in rows],
+        "ent string, ts timestamp, sid long, lbl string, val double",
+    )
+    steps = [
+        PatternStep("a", F.col("lbl") == "a"),
+        PatternStep("b", F.col("lbl") == "b", "+",
+                    aggs=[(f"{fn}_b", fn, "val") for fn in fns]),
+        PatternStep("c", F.col("lbl") == "c"),
+    ]
+    out_cols = ["n_b"] + [f"{fn}_b" for fn in fns]
+    batch = {
+        r["_key"]: tuple(r[c] for c in out_cols)
+        for r in match_pattern(Timeline.from_events(df, "ts", "ent", "sid"), steps)
+        .filter("completed").collect()
+    }
+    assert batch["all_null"] == (2, None, None, None)
+
+    spec = [("a", "1"), ("b", "+"), ("c", "1")]
+    for ent, rows in per_entity.items():
+        for cuts in ([], list(range(len(rows)))):
+            row, _base = _drive_pattern(spec, None, rows, cuts, aggs=fns)
+            got = tuple(None if pd.isna(row[c]) else row[c] for c in out_cols)
+            assert got == batch[ent], (ent, cuts, got, batch[ent])

@@ -14,11 +14,15 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
+from pyspark.sql import types as T
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from kaskada_spark.prepare import KEY, SUBSORT, TIME
 from kaskada_spark.streaming.state_machines import (
     AggSpec,
     _make_update_fn,
@@ -27,9 +31,14 @@ from kaskada_spark.streaming.state_machines import (
 
 
 class FakeState:
+    """GroupState stand-in; the test sets the watermark (``wm_ms``) and
+    reads back the last armed timer (``timeout_ms``)."""
+
     def __init__(self):
         self._v = None
         self.exists = False
+        self.wm_ms = 0
+        self.timeout_ms = None
 
     @property
     def get(self):
@@ -40,10 +49,10 @@ class FakeState:
         self.exists = True
 
     def getCurrentWatermarkMs(self):
-        return 0
+        return self.wm_ms
 
     def setTimeoutTimestamp(self, ts):
-        pass
+        self.timeout_ms = ts
 
 
 ROW = st.tuples(
@@ -275,15 +284,6 @@ from kaskada_spark.streaming.ticks import TickAggSpec, _Cal, _make_tick_fn
 HOUR_NS = 3600 * 10**9
 
 
-class FakeTickState(FakeState):
-    def __init__(self):
-        super().__init__()
-        self.wm_ms = 0
-
-    def getCurrentWatermarkMs(self):
-        return self.wm_ms
-
-
 TICK_OPS = ("sum", "count", "count_if", "min", "max", "mean",
             "variance", "stddev", "first", "last")
 
@@ -376,7 +376,7 @@ def test_tick_machine_matches_brute_force(events, cuts, op):
     )
     spec = TickAggSpec(op, "v", "out")
     fn = _make_tick_fn([spec], _Cal("hourly"))
-    state = FakeTickState()
+    state = FakeState()
     emitted = []
     model_chunks, model_wms = [], []
     seen_max = None
@@ -437,7 +437,7 @@ def _drive_tick_running(specs, tick_aliases, comp_names, pdf, cuts):
         specs, _Cal("hourly"), {s.alias: "num" for s in specs},
         ["v", "fire"], set(tick_aliases), comp_names,
     )
-    state = FakeTickState()
+    state = FakeState()
     outs = []
     seen_max_ms = None
     t0 = pd.Timestamp(2024, 1, 1).value // 10**6
@@ -622,12 +622,14 @@ def test_tick_machine_chained_split_invariance(events, cuts, inner_op, outer_op,
 # ---------------------------------------------------------------------------
 # CEP pattern machine: Spark-free micro-batch fuzz vs the batch model
 # ---------------------------------------------------------------------------
-def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None):
+def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None,
+                   aggs=("sum",)):
     """Drive streaming/cep.py::_make_pattern_fn for ONE entity with a
     fake GroupState across micro-batch `cuts`, watermark advancing to
     the max fed event time after each batch, then a far-future flush.
-    events: sorted [(t_sec, s, label, val)]; ``unless_label`` marks
-    abort rows."""
+    events: sorted [(t_sec, s, label, val)], ``val`` may be None;
+    ``unless_label`` marks abort rows; every "+"/"*" step carries one
+    ``<fn>_<name>`` aggregate of ``val`` per fn in ``aggs``."""
     from kaskada_spark.operators.cep import PatternStep
     from kaskada_spark.prepare import KEY, SUBSORT, TIME
     from kaskada_spark.streaming import cep as scep
@@ -637,7 +639,7 @@ def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None):
     quant = {n: (q, m) for n, q, m in spec_steps}
     steps = [
         PatternStep(n, None, quant[n][0],
-                    aggs=[(f"sum_{n}", "sum", "val")]
+                    aggs=[(f"{fn}_{n}", fn, "val") for fn in aggs]
                     if quant[n][0] in ("+", "*") else [],
                     min_count=quant[n][1])
         for n in labels if n in quant
@@ -648,18 +650,6 @@ def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None):
     )
     spec["has_unless"] = unless_label is not None
     fn = scep._make_pattern_fn(spec)
-
-    class S:
-        _v, exists, wm = None, False, 0
-        @property
-        def get(self):
-            return self._v
-        def update(self, v):
-            self._v, self.exists = v, True
-        def getCurrentWatermarkMs(self):
-            return self.wm
-        def setTimeoutTimestamp(self, ts):
-            pass
 
     base = pd.Timestamp(2024, 1, 1)
     def mk_pdf(evs):
@@ -672,10 +662,10 @@ def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None):
         }
         if unless_label is not None:
             cols[f"__p{len(steps)}"] = [lbl == unless_label for _t, _s, lbl, _v in evs]
-        cols["__v0"] = [float(v) for _t, _s, _l, v in evs]
+        cols["__v0"] = [np.nan if v is None else float(v) for _t, _s, _l, v in evs]
         return pd.DataFrame(cols)
 
-    state, outs = S(), []
+    state, outs = FakeState(), []
     bounds = sorted({min(c, len(events)) for c in cuts} | {0, len(events)})
     fed_max = 0
     for a, b in zip(bounds, bounds[1:]):
@@ -683,9 +673,9 @@ def _drive_pattern(spec_steps, within_s, events, cuts, unless_label=None):
         if not chunk:
             continue
         fed_max = max(fed_max, max(t for t, *_ in chunk))
-        state.wm = int((base + pd.Timedelta(seconds=fed_max)).value) // 10**6
+        state.wm_ms = int((base + pd.Timedelta(seconds=fed_max)).value) // 10**6
         outs.extend(fn(("e",), iter([mk_pdf(chunk)]), state))
-    state.wm = int((base + pd.Timedelta(days=365)).value) // 10**6
+    state.wm_ms = int((base + pd.Timedelta(days=365)).value) // 10**6
     outs.extend(fn(("e",), iter([]), state))
     if not outs:
         return None
@@ -850,6 +840,48 @@ def test_pattern_machine_min_count_fuzz():
         n_emitted += 1
     assert n_emitted >= 40
 
+    # a rank-0 `+` run found in its first occurrence's own pass is bounded
+    # by that occurrence's horizon too: `a{3,} b?` within 100 s over `a`
+    # at 0, 1, 1000 never completes, however the rows are cut
+    advice = [(0, 0, "a", 1.0), (1, 1, "a", 1.0), (1000, 2, "a", 1.0)]
+    for cuts in ([], [1], [2], [1, 2]):
+        assert _drive_pattern([("a", "+", 3), ("b", "?")], 100, advice, cuts) is None, cuts
+
+    # in-pass min_count shapes with `within`: the whole match may sit in
+    # one micro-batch (cuts=[]) or straddle random cuts
+    shapes = [
+        ([("a", "+", 3), ("b", "?")], "ab", ("a", "b")),
+        ([("a", "+", 2), ("b", "1")], "aabx", ("a", "b")),
+        ([("a", "1"), ("b", "+", 2)], "abbx", ("a", "b")),
+    ]
+    n_shape = 0
+    for spec_s, alphabet, labels in shapes:
+        for trial in range(150):
+            n = rng.randint(2, 14)
+            events = sorted(
+                (rng.randint(0, 300), s, rng.choice(alphabet), rng.randint(1, 9))
+                for s in range(n)
+            )
+            flags = [(t, s, tuple(l == x for x in labels), v) for t, s, l, v in events]
+            exp = _brute_pattern(flags, spec_s, within=60)
+            for cuts in ([], sorted(rng.randint(0, n) for _ in range(3))):
+                got = _drive_pattern(spec_s, 60, events, cuts)
+                if not exp["completed"]:
+                    assert got is None, (spec_s, trial, cuts, exp)
+                    continue
+                assert got is not None, (spec_s, trial, cuts, exp)
+                row, base = got
+                for nm in labels:
+                    e = exp[f"t_{nm}"]
+                    assert row[f"t_{nm}"] == (
+                        pd.NaT if e is None else base + pd.Timedelta(seconds=e)
+                    ) or (e is None and pd.isna(row[f"t_{nm}"])), (spec_s, trial, nm)
+                for nm, (_n, q, *_m) in zip(labels, spec_s):
+                    if q == "+":
+                        assert row[f"n_{nm}"] == exp[f"n_{nm}"], (spec_s, trial, nm)
+                n_shape += 1
+    assert n_shape >= 60
+
 
 def test_pattern_machine_unless_fuzz():
     """`a b+ d? c UNLESS x` across micro-batch splits: abort voids later
@@ -927,3 +959,408 @@ def test_pattern_machine_unless_trailing_fuzz():
         if any(a for *_x, a in flags):
             n_closed_by_abort += 1
     assert n_emitted >= 40 and n_closed_by_abort >= 10
+
+
+# ---------------------------------------------------------------------------
+# Buffering machines (merge, lookup, shift_to, shift_until): Spark-free
+# feeds vs brute-force models
+# ---------------------------------------------------------------------------
+_BASE = pd.Timestamp(2024, 1, 1)
+_ARROW = {
+    "double": pa.float64(), "string": pa.string(), "boolean": pa.bool_(),
+    "timestamp": pa.timestamp("us"), "bigint": pa.int64(),
+}
+_SPARK = {
+    "double": T.DoubleType(), "string": T.StringType(), "boolean": T.BooleanType(),
+    "timestamp": T.TimestampType(), "bigint": T.LongType(),
+}
+# payload dtypes: "native" ones survive pandas as-is; "lossy" ones are the
+# nullable timestamp (NaT) and the nullable bigint beyond 2**53
+_PAYLOADS = {
+    "native": ("double", "string", "boolean"),
+    "lossy": ("timestamp", "bigint"),
+}
+
+
+def _payload_value(dtype, draw):
+    if draw == 0:
+        return None
+    return {
+        "double": float(draw) / 4,
+        "string": "abc"[draw % 3] * draw,
+        "boolean": draw % 2 == 0,
+        "timestamp": (_BASE + pd.Timedelta(minutes=draw)).to_pydatetime(),
+        "bigint": (2**53 + draw) * (-1) ** draw,
+    }[dtype]
+
+
+def _wire(dtype):
+    """The Arrow type a machine's payload column arrives as: integral
+    payloads ride as strings."""
+    return pa.string() if dtype == "bigint" else _ARROW[dtype]
+
+
+def _to_pdf(cols):
+    """{name: (arrow type, values)} -> pandas, the way Spark hands a
+    micro-batch to a pandas UDF (nullable ints as float64, NaT, ...)."""
+    arrays = {}
+    for n, (at, vals) in cols.items():
+        if at == pa.string():
+            vals = [v if v is None or isinstance(v, str) else str(v) for v in vals]
+        arrays[n] = pa.array(vals, type=at)
+    return pa.table(arrays).to_pandas(coerce_temporal_nanoseconds=True)
+
+
+def _from_pdf(pdf, types):
+    """Machine output -> python rows, converted through Arrow to the
+    declared output types (a value of the wrong type fails here)."""
+    if pdf is None or not len(pdf):
+        return []
+    cols = []
+    for n, at in types.items():
+        ser = pdf[n]
+        arr = pa.Array.from_pandas(ser, mask=ser.isnull().to_numpy(), type=at)
+        cols.append(arr.to_pylist())
+    return list(zip(*cols))
+
+
+def _ts(sec):
+    return (_BASE + pd.Timedelta(seconds=sec)).to_pydatetime()
+
+
+def _feed(fn, key, events, arrival, cuts, to_pdf):
+    """Feed ``events`` in ``arrival`` order, cut into micro-batches at
+    ``cuts``; the watermark before each batch lags the fed maximum by at
+    least one batch and stays behind every row still to come (rows
+    arrive out of order, but never behind the watermark). A final call
+    with a far-future watermark flushes everything settleable."""
+    order = [events[i] for i in arrival]
+    bounds = sorted({min(c, len(order)) for c in cuts} | {0, len(order)})
+    batches = [order[a:b] for a, b in zip(bounds, bounds[1:]) if b > a]
+    state, outs, fed_max = FakeState(), [], None
+    for j, batch in enumerate(batches):
+        future = min(e["t"] for b in batches[j:] for e in b)
+        lag = fed_max if fed_max is not None else -1
+        state.wm_ms = max(int(pd.Timestamp(_ts(min(lag, future))).value) // 10**6 - 1, 0)
+        outs.extend(fn(key, iter([to_pdf(batch)]), state))
+        fed_max = max(e["t"] for e in batch) if fed_max is None else max(
+            fed_max, max(e["t"] for e in batch))
+    state.wm_ms = int((_BASE + pd.Timedelta(days=1)).value) // 10**6
+    outs.extend(fn(key, iter([]), state))
+    return outs, state
+
+
+_FEEDS = ("one_batch", "row_per_batch", "random_cuts")
+
+
+def _cuts(feed, n, rnd_cuts):
+    if feed == "one_batch":
+        return []
+    if feed == "row_per_batch":
+        return list(range(n + 1))
+    return rnd_cuts
+
+
+def _arrival(events, jitter):
+    """Arrival order: sorted by time plus a per-row jitter (seconds)."""
+    return sorted(range(len(events)),
+                  key=lambda i: (events[i]["t"] + jitter[i % len(jitter)], i))
+
+
+def _gen_events(data, kinds, n_max=18):
+    """Rows as dicts: t (seconds), s (unique subsort), kind, payload draw."""
+    n = data.draw(st.integers(0, n_max))
+    return [
+        {
+            "t": data.draw(st.integers(0, 12)),
+            "s": 10 * i,
+            "kind": data.draw(st.sampled_from(kinds)),
+            "draws": data.draw(st.lists(st.integers(0, 3), min_size=4, max_size=4)),
+            "delta": data.draw(st.sampled_from((0, 1, 3, 7))),
+        }
+        for i in range(n)
+    ]
+
+
+def _payload(e, dtypes, side=0):
+    return {d: _payload_value(d, e["draws"][(j + side) % 4]) for j, d in enumerate(dtypes)}
+
+
+# --- shift_to --------------------------------------------------------------
+def _shift_to_fn(dtypes):
+    from kaskada_spark.streaming.shift import _make_shift_fn
+
+    return _make_shift_fn({d: _SPARK[d] for d in dtypes})
+
+
+def _shift_to_pdf(dtypes):
+    from kaskada_spark.streaming.shift import _TARGET
+
+    def mk(batch):
+        return _to_pdf({
+            TIME: (pa.timestamp("us"), [_ts(e["t"]) for e in batch]),
+            SUBSORT: (pa.int64(), [e["s"] for e in batch]),
+            KEY: (pa.string(), ["e"] * len(batch)),
+            **{d: (_wire(d), [_payload(e, dtypes)[d] for e in batch]) for d in dtypes},
+            _TARGET: (pa.timestamp("us"), [_ts(e["t"] + e["delta"]) for e in batch]),
+        })
+    return mk
+
+
+def _shift_to_model(events, dtypes):
+    rows = sorted(events, key=lambda e: (e["t"] + e["delta"], e["t"], e["s"]))
+    return [(_ts(e["t"] + e["delta"]), e["s"], "e", *_payload(e, dtypes).values())
+            for e in rows]
+
+
+# --- shift_until -----------------------------------------------------------
+def _shift_until_fn(dtypes):
+    from kaskada_spark.streaming.shift import _make_shift_until_fn
+
+    return _make_shift_until_fn({d: _SPARK[d] for d in dtypes})
+
+
+def _shift_until_pdf(dtypes):
+    from kaskada_spark.streaming.shift import _PRED
+
+    def mk(batch):
+        return _to_pdf({
+            TIME: (pa.timestamp("us"), [_ts(e["t"]) for e in batch]),
+            SUBSORT: (pa.int64(), [e["s"] for e in batch]),
+            KEY: (pa.string(), ["e"] * len(batch)),
+            **{d: (_wire(d), [_payload(e, dtypes)[d] for e in batch]) for d in dtypes},
+            _PRED: (pa.bool_(), [e["kind"] == "fire" for e in batch]),
+        })
+    return mk
+
+
+def _shift_until_model(events, dtypes):
+    rows = sorted(events, key=lambda e: (e["t"], e["s"]))
+    out = []
+    for i, e in enumerate(rows):
+        fire = next((f for f in rows[i:] if f["kind"] == "fire"), None)
+        if fire is not None:
+            out.append((_ts(fire["t"]), e["s"], "e", *_payload(e, dtypes).values()))
+    return out
+
+
+# --- as-of lookup ----------------------------------------------------------
+def _lookup_fn(dtypes):
+    from kaskada_spark.streaming.join import _make_lookup_fn
+
+    return _make_lookup_fn(T.LongType(), {d: _SPARK[d] for d in dtypes})
+
+
+def _split_sides(events, a, b):
+    """Expand rows of kind "both" into one row per side at the same
+    (t, s) — the coincident-instant tie rule."""
+    out = []
+    for e in events:
+        for side in ((a, b) if e["kind"] == "both" else (e["kind"],)):
+            out.append({**e, "kind": side})
+    return out
+
+
+def _lookup_key(e):
+    return 2**53 + 1 + e["s"]
+
+
+def _lookup_pdf(dtypes):
+    from kaskada_spark.streaming.join import _IS_REQ, _ORIG
+
+    def mk(batch):
+        req = [e["kind"] == "req" for e in batch]
+        return _to_pdf({
+            KEY: (pa.string(), ["e"] * len(batch)),
+            TIME: (pa.timestamp("us"), [_ts(e["t"]) for e in batch]),
+            SUBSORT: (pa.int64(), [e["s"] for e in batch]),
+            _ORIG: (pa.string(), [str(_lookup_key(e)) if r else None
+                                  for e, r in zip(batch, req)]),
+            _IS_REQ: (pa.bool_(), req),
+            **{f"__f_{d}": (_wire(d), [None if r else _payload(e, dtypes)[d]
+                                       for e, r in zip(batch, req)])
+               for d in dtypes},
+        })
+    return mk
+
+
+def _lookup_model(events, dtypes):
+    snap = {d: None for d in dtypes}
+    out = []
+    for e in sorted(events, key=lambda e: (e["t"], e["s"], e["kind"] == "req")):
+        if e["kind"] == "req":
+            out.append((_lookup_key(e), _ts(e["t"]), e["s"], *snap.values()))
+        else:
+            snap = _payload(e, dtypes)  # a null foreign value overwrites
+    return out
+
+
+# --- merge-align -----------------------------------------------------------
+def _merge_cols(dtypes):
+    return [f"{d}_l" for d in dtypes], [f"{d}_r" for d in dtypes]
+
+
+def _merge_as_of(dtypes):
+    lout, rout = _merge_cols(dtypes)
+    return [lout[0], rout[-1]]
+
+
+def _merge_fn(dtypes):
+    from kaskada_spark.streaming.merge import _make_merge_fn
+
+    lout, rout = _merge_cols(dtypes)
+    return _make_merge_fn({c: _SPARK[d] for c, d in zip(lout, dtypes)},
+                          {c: _SPARK[d] for c, d in zip(rout, dtypes)},
+                          _merge_as_of(dtypes))
+
+
+def _merge_row_values(e, dtypes):
+    lout, rout = _merge_cols(dtypes)
+    vals = dict.fromkeys(lout + rout)
+    if e["kind"] == "left":
+        vals.update(zip(lout, _payload(e, dtypes).values()))
+    else:
+        vals.update(zip(rout, _payload(e, dtypes, side=1).values()))
+    return vals
+
+
+def _merge_pdf(dtypes):
+    from kaskada_spark.streaming.merge import _SIDE
+
+    lout, rout = _merge_cols(dtypes)
+
+    def mk(batch):
+        vals = [_merge_row_values(e, dtypes) for e in batch]
+        return _to_pdf({
+            KEY: (pa.string(), ["e"] * len(batch)),
+            TIME: (pa.timestamp("us"), [_ts(e["t"]) for e in batch]),
+            SUBSORT: (pa.int64(), [e["s"] for e in batch]),
+            _SIDE: (pa.bool_(), [e["kind"] == "left" for e in batch]),
+            **{c: (_wire(c.rsplit("_", 1)[0]), [v[c] for v in vals])
+               for c in lout + rout},
+        })
+    return mk
+
+
+def _merge_model(events, dtypes):
+    lout, rout = _merge_cols(dtypes)
+    fused = {}
+    for e in events:
+        row = fused.setdefault((e["t"], e["s"]), dict.fromkeys(lout + rout))
+        for c, v in _merge_row_values(e, dtypes).items():
+            if (c in lout) == (e["kind"] == "left"):
+                row[c] = v
+    latch = dict.fromkeys(_merge_as_of(dtypes))
+    out = []
+    for (t, s), row in sorted(fused.items()):
+        for c in latch:  # as_of latches skip nulls
+            latch[c] = row[c] if row[c] is not None else latch[c]
+            row[c] = latch[c]
+        out.append(("e", _ts(t), s, *row.values()))
+    return out
+
+
+_MACHINES = {
+    # name: (update fn, pdf maker, model, row kinds, key, output columns)
+    "shift_to": (_shift_to_fn, _shift_to_pdf, _shift_to_model, ("row",), ("e",),
+                 lambda ds: [TIME, SUBSORT, KEY, *ds]),
+    "shift_until": (_shift_until_fn, _shift_until_pdf, _shift_until_model,
+                    ("row", "fire"), ("e",), lambda ds: [TIME, SUBSORT, KEY, *ds]),
+    "lookup": (_lookup_fn, _lookup_pdf, _lookup_model, ("req", "for", "both"), ("e",),
+               lambda ds: [KEY, TIME, SUBSORT, *ds]),
+    "merge": (_merge_fn, _merge_pdf, _merge_model, ("left", "right", "both"), ("e",),
+              lambda ds: [KEY, TIME, SUBSORT, *sum(_merge_cols(ds), [])]),
+}
+
+
+def _out_types(machine, dtypes):
+    cols = _MACHINES[machine][5](dtypes)
+    types = {TIME: pa.timestamp("us"), SUBSORT: pa.int64(),
+             KEY: pa.int64() if machine == "lookup" else pa.string()}
+    for c in cols:
+        if c not in types:
+            types[c] = _ARROW[c.rsplit("_", 1)[0] if machine == "merge" else c]
+    return {c: types[c] for c in cols}
+
+
+def _expand(machine, events):
+    if machine == "lookup":
+        return _split_sides(events, "for", "req")
+    if machine == "merge":
+        return _split_sides(events, "left", "right")
+    return events
+
+
+@pytest.mark.parametrize("payload", sorted(_PAYLOADS))
+@pytest.mark.parametrize("machine", sorted(_MACHINES))
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture])
+@given(data=st.data())
+def test_buffering_machine_feeds_match_model(machine, payload, data):
+    """Every buffering machine, fed one batch, one row per batch, or at
+    random cuts — rows out of order within the watermark delay, nulls
+    in every payload dtype — emits exactly the brute-force model's
+    rows, in order."""
+    dtypes = _PAYLOADS[payload]
+    _fn, _pdf, model, kinds, _key, _cols = _MACHINES[machine]
+    events = _gen_events(data, kinds)
+    jitter = data.draw(st.lists(st.integers(0, 4), min_size=1, max_size=8))
+    rnd_cuts = data.draw(st.lists(st.integers(0, 40), max_size=6))
+    # lookup/merge "both" rows expand to one row per side
+    events = _expand(machine, events)
+    expected = model(events, dtypes)
+    for feed in _FEEDS:
+        outs, _state = _feed(_fn(dtypes), _key, events, _arrival(events, jitter),
+                             _cuts(feed, len(events), rnd_cuts), _pdf(dtypes))
+        got = [r for o in outs for r in _from_pdf(o, _out_types(machine, dtypes))]
+        assert got == expected, feed
+
+
+def _ev(t, s, kind="row", delta=0, draws=(1, 2, 3, 1)):
+    return {"t": t, "s": s, "kind": kind, "draws": list(draws), "delta": delta}
+
+
+# per machine: calls of (rows, watermark seconds); the straggler lands
+# exactly on the high-water the first settle leaves behind
+_STRAGGLER_CASES = {
+    "shift_to": ([([_ev(0, 0, delta=5), _ev(1, 10, delta=3)], 0),
+                  ([_ev(6, 20)], 5)], _ev(5, 30)),
+    "shift_until": ([([_ev(0, 0), _ev(2, 20, "fire"), _ev(3, 30)], 2)],
+                    _ev(2, 20, draws=(2, 2, 2, 2))),
+    "lookup": ([([_ev(0, 0, "for"), _ev(2, 10, "req")], 2)],
+               _ev(2, 20, "for", draws=(3, 3, 3, 3))),
+    "merge": ([([_ev(0, 0, "left"), _ev(2, 10, "right")], 2)],
+              _ev(2, 20, "left", draws=(3, 3, 3, 3))),
+}
+_AFTER = {  # rows fed after the straggler, so a wrongly kept one shows
+    "shift_to": [_ev(7, 40)],
+    "shift_until": [_ev(4, 40), _ev(5, 50, "fire")],
+    "lookup": [_ev(3, 40, "req")],
+    "merge": [_ev(3, 40, "right")],
+}
+
+
+@pytest.mark.parametrize("machine", sorted(_MACHINES))
+def test_buffering_machine_drops_row_on_settled_high_water(machine):
+    """A row landing exactly on the settled high-water — possible at
+    exactly the watermark, which Spark does not drop upstream — is
+    dropped, and nothing else changes: output and final state equal the
+    same feed without it."""
+    dtypes = _PAYLOADS["native"]
+    make_fn, make_pdf, *_ = _MACHINES[machine]
+    calls, straggler = _STRAGGLER_CASES[machine]
+    wm_hw = calls[-1][1]
+
+    def run(with_straggler):
+        fn, mk, state, outs = make_fn(dtypes), make_pdf(dtypes), FakeState(), []
+        late = [straggler] if with_straggler else []
+        feed = calls + [(late, wm_hw), (_AFTER[machine], wm_hw), ([], 10**5)]
+        for rows, wm_s in feed:
+            state.wm_ms = int(pd.Timestamp(_ts(wm_s)).value) // 10**6
+            outs.extend(fn(("e",), iter([mk(rows)] if rows else []), state))
+        return [r for o in outs for r in _from_pdf(o, _out_types(machine, dtypes))], state
+
+    base_rows, base_state = run(False)
+    rows, state = run(True)
+    assert base_rows and rows == base_rows
+    assert state.get == base_state.get and state.timeout_ms == base_state.timeout_ms

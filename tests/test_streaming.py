@@ -3785,3 +3785,91 @@ def test_streaming_pair_counts_equals_batch(spark, sf_dir, tmp_path):
         assert got.get(k) == v, (k, got.get(k), v)
     for k in got:
         assert k in exp, f"invented window row {k}"
+
+
+def _nullable_payload_frame(spark, ent_col, minutes, seq0, fire_at=()):
+    """Universal-shape timeline whose payload carries a nullable
+    timestamp (``when``, one null per entity) and a nullable bigint
+    (``big``: 2**53 + 1, a null, small values) — the two dtypes that
+    pandas cannot carry natively through an Arrow round trip."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 5, 1, 12, 0)
+    rows = []
+    for ent in (1, 2):
+        for j, m in enumerate(minutes):
+            when = None if j == 1 else t0 + dt.timedelta(hours=ent, minutes=j)
+            big = (2**53 + 1, None)[j % 2] if j < 2 else ent * 10 + j
+            rows.append((ent, t0 + dt.timedelta(minutes=m), seq0 + ent * 100 + j,
+                         when, big, float(m), m in fire_at))
+    schema = (f"{ent_col} long, time timestamp, seq long, when timestamp, "
+              "big long, price double, fire boolean")
+    df = spark.createDataFrame(rows, schema)
+    return Timeline.from_events(df, "time", ent_col, "seq")
+
+
+@pytest.mark.parametrize("machine", ["shift_by", "shift_until", "lookup", "merge"])
+def test_stream_nullable_timestamp_and_bigint_payloads(spark, tmp_path, machine):
+    """Every buffering machine carries a nullable timestamp payload and
+    a nullable bigint beyond 2**53 through its state unchanged: output
+    equals the batch twin on every row the final watermark settled."""
+    import datetime as dt
+
+    from kaskada_spark.operators.merge import merge as batch_merge
+    from kaskada_spark.streaming.join import asof_lookup_stream
+    from kaskada_spark.streaming.merge import merge_align_stream
+    from kaskada_spark.streaming.shift import shift_by_stream, shift_until_stream
+
+    t0 = dt.datetime(2024, 5, 1, 12, 0)
+    main = _nullable_payload_frame(spark, "k", range(0, 50, 10), 0, fire_at=(20, 40))
+    other = _nullable_payload_frame(spark, "fk", range(0, 50, 10), 1000)
+
+    def stream(tl, name):
+        d = _write_time_split(tl.df, ["_time", "_subsort"], str(tmp_path / name), 3)
+        return spark.readStream.schema(tl.df.schema).option("maxFilesPerTrigger", 1).parquet(d)
+
+    cols = ["when", "big", "price"]
+    if machine == "shift_by":
+        delta = F.expr("interval 5 minutes")
+        batch = main.shift_by(delta).df
+        out = shift_by_stream(stream(main, "in"), delta)
+        wm_final = t0 + dt.timedelta(minutes=40)
+    elif machine == "shift_until":
+        batch = main.shift_until(F.col("fire")).df
+        out = shift_until_stream(stream(main, "in"), F.col("fire"))
+        wm_final = t0 + dt.timedelta(minutes=40)
+    elif machine == "lookup":
+        req = _nullable_payload_frame(spark, "user", range(5, 45, 10), 5000)
+        req = Timeline(req.df.select("_time", "_subsort", "_key"))
+        key = F.col("_key")
+        batch = req.lookup(other, key=key, values=cols).df
+        out = asof_lookup_stream(stream(req, "p"), stream(other, "f"), key=key, values=cols)
+        wm_final = t0 + dt.timedelta(minutes=35)
+    else:
+        right = Timeline(other.df.select("_time", "_subsort", "_key", F.col("price").alias("qty")))
+        batch = batch_merge(main, right, as_of=["big"]).df
+        out = merge_align_stream(stream(main, "l"), stream(right, "r"), as_of=["big"])
+        cols = ["when", "big", "price", "qty"]
+        wm_final = t0 + dt.timedelta(minutes=40)
+
+    sink = ExactlyOnceSink(str(tmp_path / "out"), time_col="_time")
+    q = (
+        out.writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .foreachBatch(sink)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    def rows(df):
+        return {
+            (r["_key"], r["_time"], r["_subsort"]): tuple(r[c] for c in cols)
+            for r in df.collect()
+            if r["_time"] <= wm_final
+        }
+
+    exp, got = rows(batch), rows(sink.read_output(spark))
+    assert any(v[1] == 2**53 + 1 for v in exp.values()), "fixture lost its bigint"
+    assert any(v[0] is None for v in exp.values()), "fixture lost its null timestamp"
+    assert got == exp
